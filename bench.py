@@ -337,6 +337,12 @@ def main() -> None:
                 payload["scaling_x10"] = json.load(fh)
         except Exception:  # noqa: BLE001 - evidence rider, never fatal
             pass
+    # Bases-inclusive headline: shared work lives in timed but
+    # unheadlined base builds, so the bases-blind "value" is not
+    # comparable across runs whose base list differs. total_with_bases
+    # is the like-for-like number; it is set before the dump so the
+    # persisted record carries it too.
+    payload["total_with_bases"] = round(total + payload["bases_total"], 3)
     # The full per-query payload outgrew the driver's stdout tail
     # capture in r04 ("parsed": null — 49 queries x min+median on one
     # line). Persist the full detail in-repo so rounds stay diffable,
@@ -349,11 +355,6 @@ def main() -> None:
     ) as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    # Bases-inclusive headline (VERDICT r13 item 2): r13 moved shared
-    # work into timed-but-unheadlined base builds, so the bases-blind
-    # "value" is not comparable across rounds whose base list differs.
-    # total_with_bases is the like-for-like round-over-round number.
-    payload["total_with_bases"] = round(total + payload["bases_total"], 3)
     compact = {
         "metric": payload["metric"],
         "value": payload["value"],

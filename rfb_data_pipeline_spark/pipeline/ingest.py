@@ -17,6 +17,7 @@ Key upgrades over the reference:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -48,6 +49,23 @@ def _clear_quarantine_partition(
     part = Path(out_dir) / "_quarantine" / table / f"ref_ym={ref_ym}"
     if part.exists():
         shutil.rmtree(part, ignore_errors=True)
+
+
+def _clear_stale_staging(table_dir: str) -> None:
+    """Remove the staging dirs a killed writer left in ``table_dir``.
+    A dynamic partition overwrite stages its files under
+    ``.spark-staging-<job id>`` and deletes that dir when it commits or
+    aborts; a driver killed mid-write (the §3.2 crash) may do neither,
+    and the resume's own overwrite never touches another job's staging
+    dir. A table has one writer at a time (run_month loads each table
+    once, from one thread), so any staging dir present before the write
+    is debris. Local filesystem semantics, like
+    ``_clear_quarantine_partition``."""
+    import glob
+    import shutil
+
+    for d in glob.glob(os.path.join(table_dir, ".spark-staging-*")):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @dataclass
@@ -108,7 +126,8 @@ def load_table(
     # Raw-side Observation ABOVE the clean filter: n_raw/n_corrupt are
     # computed by the silver write's own scan — the docstring's
     # "no second scan" claim is now literally true (the r09 review
-    # found scan_counts re-reading the whole CSV after the write).
+    # found a separate count aggregation re-reading the whole CSV
+    # after the write).
     # first-col count satisfies the raw-scan corrupt-column rule.
     first_col = next(c for c in raw.columns if c != "_corrupt_record")
     raw_obs = Observation(f"raw_{table}_{ref_ym}")
@@ -135,6 +154,7 @@ def load_table(
     # Dynamic partition overwrite: only the ref_ym partition is
     # replaced — the Spark-native TRUNCATE-per-month (reference A11)
     # with atomicity per partition.
+    _clear_stale_staging(f"{out_dir}/{table}")
     (
         observed.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -149,6 +169,7 @@ def load_table(
     n_clean = n_raw - n_corrupt
 
     if quarantine and n_corrupt > 0:
+        _clear_stale_staging(f"{out_dir}/_quarantine/{table}")
         (
             # full row width: a projection of only the corrupt column
             # is rejected on raw CSV scans (see sources.rfb_csv).

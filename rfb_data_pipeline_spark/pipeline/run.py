@@ -9,14 +9,26 @@ after every single mutation — src/main.py:103,120,162,220 — which at
 37 files/month is pure overhead; per-stage persistence gives the same
 crash-resume granularity the status lattice can actually express).
 
+The control plane runs on the driver: the manifest is a list of plain
+records (``manifest.read_records`` and friends), so planning, download,
+extraction, the completeness gate and the final bookkeeping run no
+Spark job, and re-running a finished month submits none at all. Spark
+work happens only inside ``load_table``.
+
 Self-heal: a corrupt archive at the extract stage resets its
 status_download to 'pendente' (reference src/main.py:116-119), so the
 next run re-downloads it.
 
-The correct+load stages collapse into one distributed pass
+The correct+load stages collapse into one distributed pass per table
 (read CSV with the sniffed encoding → silver → partitioned parquet):
 the reference's intermediate '__corrigido' file copy exists only to
 feed pandas a clean UTF-8 file, which the Spark reader does not need.
+The month's tables load concurrently, one thread per table, each
+thread starting from a clone of the caller's Spark thread properties
+(job group, scheduler pool), so a caller's job group tags every load
+job. Results come back in sorted-table order; if any load raises,
+``run_month`` re-raises once every load has finished and records no
+load-stage update, so the resume reloads those tables.
 """
 
 from __future__ import annotations
@@ -24,8 +36,10 @@ from __future__ import annotations
 import os
 import zipfile
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from rfb_data_pipeline_spark.pipeline import manifest as mf
@@ -93,74 +107,66 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
 
     # ---- plan (A1; resume short-circuits like src/main.py:51-53)
     if os.path.exists(manifest_path):
-        manifest = mf.load_manifest(spark, manifest_path)
+        manifest = mf.read_records(manifest_path)
     else:
-        manifest = mf.new_manifest(spark, discover_files(cfg.base_url, cfg.fetch))
+        manifest = mf.new_records(discover_files(cfg.base_url, cfg.fetch))
 
     # ---- download (A2/A21)
     todo = [
-        (r.arquivo, r.url, os.path.join(zips_dir, r.arquivo))
-        for r in mf.pending_for_stage(manifest, "download").collect()
+        (r["arquivo"], r["url"], os.path.join(zips_dir, r["arquivo"]))
+        for r in mf.pending_records(manifest, "download")
     ]
     if todo:
         results = download_pending(todo, stream=cfg.stream, backoff_sec=cfg.backoff_sec)
-        updates = spark.createDataFrame(
+        manifest = mf.update_records(
+            manifest,
             [
-                (
-                    r["arquivo"],
-                    mf.SUCCESS if r["ok"] else mf.FAILED,
-                    r["attempts"],
-                    r["caminho_zip"],
-                )
+                {
+                    "arquivo": r["arquivo"],
+                    "status_download": mf.SUCCESS if r["ok"] else mf.FAILED,
+                    "tentativas_download": r["attempts"],
+                    "caminho_zip": r["caminho_zip"],
+                }
                 for r in results
             ],
-            "arquivo string, new_status_download string, "
-            "new_tentativas_download int, new_caminho_zip string",
         )
-        manifest = mf.apply_updates(manifest, updates)
-        mf.save_manifest(manifest, manifest_path)
+        mf.write_records(manifest, manifest_path)
 
     # ---- extract (A3, with BadZipFile self-heal)
-    updates_rows = []
-    for r in mf.pending_for_stage(manifest, "extracao").collect():
+    updates = []
+    for r in mf.pending_records(manifest, "extracao"):
         try:
-            with zipfile.ZipFile(r.caminho_zip) as zf:
+            with zipfile.ZipFile(r["caminho_zip"]) as zf:
                 members = [m for m in zf.namelist() if not m.endswith("/")]
                 zf.extractall(extract_dir)
-            updates_rows.append((r.arquivo, mf.SUCCESS, mf.PENDING, members))
+            updates.append(
+                {
+                    "arquivo": r["arquivo"],
+                    "status_extracao": mf.SUCCESS,
+                    "status_correcao": mf.PENDING,
+                    "arquivos_extraidos": members,
+                }
+            )
         except (zipfile.BadZipFile, OSError):
-            # self-heal: reopen the download stage (src/main.py:116-119).
+            # self-heal: reopen the download stage (src/main.py:116-119);
+            # a fresh download must re-run, FAILED would stop the lattice.
             # OSError covers the zip VANISHING between runs (a crash
             # after the per-row os.remove but before the stage's
             # manifest save left caminho_zip dangling — r09 review:
             # FileNotFoundError used to abort run_month on every
             # resume until the manifest was hand-edited)
-            if r.caminho_zip and os.path.exists(r.caminho_zip):
-                os.remove(r.caminho_zip)
-            updates_rows.append((r.arquivo, mf.PENDING, mf.PENDING, None))
-    if updates_rows:
-        updates = spark.createDataFrame(
-            [
-                (a, None if st == mf.PENDING else st, st2, m, st)
-                for a, st, st2, m in updates_rows
-            ],
-            "arquivo string, new_status_extracao string, "
-            "new_status_correcao string, new_arquivos_extraidos array<string>, "
-            "new_status_download string",
-        )
-        # note: new_status_download only set for the self-heal rows
-        heal = updates.filter("new_status_extracao is null").selectExpr(
-            "arquivo", "'pendente' as new_status_download",
-            "'pendente' as new_status_extracao",
-        )
-        ok = updates.filter("new_status_extracao is not null").drop(
-            "new_status_download"
-        )
-        manifest = mf.apply_updates(manifest, ok)
-        if heal.count() > 0:
-            # a fresh download must re-run; FAILED would stop the lattice
-            manifest = mf.apply_updates(manifest, heal)
-        mf.save_manifest(manifest, manifest_path)
+            if r["caminho_zip"] and os.path.exists(r["caminho_zip"]):
+                os.remove(r["caminho_zip"])
+            updates.append(
+                {
+                    "arquivo": r["arquivo"],
+                    "status_download": mf.PENDING,
+                    "status_extracao": mf.PENDING,
+                }
+            )
+    if updates:
+        manifest = mf.update_records(manifest, updates)
+        mf.write_records(manifest, manifest_path)
 
     # ---- correct + load (A4-A13, A15) — grouped by ROUTED TABLE, not
     # by file: real months ship multi-part tables (Empresas0..9 all
@@ -170,7 +176,7 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
     # csv_paths list (round-2 ADVICE, high — the reference has the
     # same TRUNCATE-per-file quirk at src/main.py:200; we fix it).
     report = RunReport(manifest_path=manifest_path)
-    pending = mf.pending_for_stage(manifest, "correcao").collect()
+    pending = mf.pending_records(manifest, "correcao")
     # Completeness gate (r09 review): a file that has not extracted
     # has unknown members, and load_table's atomic partition overwrite
     # demands EVERY part of a table in one call — loading around a
@@ -183,11 +189,11 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
     held_tables: set[str] = set()
     hold_all = False
     incomplete_files = []
-    for r in manifest.collect():
-        if r.status_extracao == mf.SUCCESS:
+    for r in manifest:
+        if r["status_extracao"] == mf.SUCCESS:
             continue
-        incomplete_files.append(r.arquivo)
-        t = _zip_expected_table(r.arquivo)
+        incomplete_files.append(r["arquivo"])
+        t = _zip_expected_table(r["arquivo"])
         if t is None:
             hold_all = True
         else:
@@ -202,17 +208,18 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
     zip_tables: dict[str, set[str | None]] = {}
     table_inputs: dict[str, list[str]] = {}
     table_encodings: dict[str, dict[str, str]] = {}
-    pending_names = {r.arquivo for r in pending}
+    pending_names = {r["arquivo"] for r in pending}
     tables_to_load: set[str] = set()
     member_owner: dict[str, str] = {}
-    for r in manifest.collect() if pending else []:
-        if r.status_extracao != mf.SUCCESS:
+    for r in manifest if pending else []:
+        if r["status_extracao"] != mf.SUCCESS:
             continue
-        zip_tables[r.arquivo] = set()
-        for member in r.arquivos_extraidos or []:
+        arquivo = r["arquivo"]
+        zip_tables[arquivo] = set()
+        for member in r["arquivos_extraidos"] or []:
             path = os.path.join(extract_dir, member)
             table = _route_one(member)
-            zip_tables[r.arquivo].add(table)
+            zip_tables[arquivo].add(table)
             if table is None:
                 # An unroutable member (readme/layout file) never
                 # feeds csv_paths, so a cross-zip name collision on it
@@ -230,11 +237,11 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
             # Silent data corruption either way: fail loud (r11
             # review; the real portal's member names are unique by
             # contract).
-            owner = member_owner.setdefault(member, r.arquivo)
-            if owner != r.arquivo:
+            owner = member_owner.setdefault(member, arquivo)
+            if owner != arquivo:
                 raise RuntimeError(
                     f"extracted member name collision: {member!r} is "
-                    f"claimed by both {owner!r} and {r.arquivo!r} — the "
+                    f"claimed by both {owner!r} and {arquivo!r} — the "
                     "shared extract dir holds only one of the two "
                     "files, and loading it twice would double its "
                     "rows. The month's drop violates the unique-name "
@@ -247,7 +254,7 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
                 continue
             table_inputs.setdefault(table, []).append(path)
             table_encodings.setdefault(table, {})[path] = sniff_encoding(path)
-            if r.arquivo in pending_names:
+            if arquivo in pending_names:
                 tables_to_load.add(table)
 
     if hold_all:
@@ -255,41 +262,59 @@ def run_month(spark: SparkSession, cfg: RunConfig) -> RunReport:
     else:
         tables_to_load -= held_tables
 
-    table_passed: dict[str, bool] = {}
-    for table in sorted(tables_to_load):
-        lr = load_table(
-            spark,
-            table,
-            table_inputs[table],
-            cfg.out_dir,
-            ref_ym=cfg.ref_ym,
-            encoding=table_encodings[table],
-        )
-        report.loads.append(lr)
-        table_passed[table] = lr.passed
+    # One thread per table: the loads are independent partition
+    # overwrites, and most tables are too small to fill the cores on
+    # their own. Each thread starts from the caller's Spark thread
+    # properties (job group, scheduler pool), cloned per SUBMISSION: a
+    # wrapper made once shares one clone among all threads, so a load
+    # that sets its own job group would retag its siblings' jobs.
+    tables = sorted(tables_to_load)
+    if tables:
+        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(spark)(load_table),
+                    spark,
+                    table,
+                    table_inputs[table],
+                    cfg.out_dir,
+                    ref_ym=cfg.ref_ym,
+                    encoding=table_encodings[table],
+                )
+                for table in tables
+            ]
+        # every load has finished here. A failure re-raises (the first
+        # in table order, naming the others) and leaves the load stage
+        # unrecorded, so the resume reloads those tables.
+        failures = [(t, f.exception()) for t, f in zip(tables, futures) if f.exception()]
+        if failures:
+            first = failures[0][1]
+            for t, exc in failures[1:]:
+                first.add_note(f"the load of {t} failed too: {exc!r}")
+            raise first
+        report.loads = [f.result() for f in futures]
+    table_passed = {lr.table: lr.passed for lr in report.loads}
 
     if pending:
-        rows = []
+        updates = []
         for r in pending:
-            tables = zip_tables[r.arquivo]
-            routed = {t for t in tables if t is not None}
+            member_tables = zip_tables[r["arquivo"]]
+            routed = {t for t in member_tables if t is not None}
             if routed and not routed <= set(table_passed):
                 # routes to a HELD table: this run did not load it, so
                 # the file stays pending for the resume
                 continue
             if routed and any(not table_passed[t] for t in routed):
                 final = mf.FAILED
-            elif not routed and tables:
+            elif not routed and member_tables:
                 final = mf.IGNORED
             else:
                 final = mf.SUCCESS
-            rows.append((r.arquivo, mf.SUCCESS, final))
-        updates = spark.createDataFrame(
-            rows,
-            "arquivo string, new_status_correcao string, new_status_carga string",
-        )
-        manifest = mf.apply_updates(manifest, updates)
-        mf.save_manifest(manifest, manifest_path)
+            updates.append(
+                {"arquivo": r["arquivo"], "status_correcao": mf.SUCCESS, "status_carga": final}
+            )
+        manifest = mf.update_records(manifest, updates)
+        mf.write_records(manifest, manifest_path)
 
     return report
 

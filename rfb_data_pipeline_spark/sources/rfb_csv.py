@@ -101,19 +101,6 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, bad
 
 
-def scan_counts(df: DataFrame) -> tuple[int, int]:
-    """(n_raw, n_corrupt) in a single scan-side aggregation. A real
-    column is referenced alongside the corrupt column to satisfy the
-    raw-scan restriction above."""
-    first_col = next(c for c in df.columns if c != CORRUPT_COL)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n_raw"),
-        F.count(CORRUPT_COL).alias("n_corrupt"),
-        F.count(first_col).alias("_touch"),
-    ).collect()[0]
-    return row["n_raw"], row["n_corrupt"]
-
-
 def route_table(filename_col: str = "filename") -> F.Column:
     """Filename → table-name routing expression (reference A15,
     src/main.py:166-171,186-194): strip the '__corrigido' marker, take
@@ -132,7 +119,7 @@ def route_table_py(filename: str) -> str | None:
     """Driver-side twin of :func:`route_table` for orchestration code that
     routes one filename at a time (the manifest loop) — a dict lookup, not
     a per-file Spark job. Parity with the expression is pinned by
-    ``tests/test_rfb_csv.py``.
+    ``tests/test_rfb_pipeline.py::test_route_table_py_parity``.
     """
     base = filename.split("__corrigido")[0]
     suffix = base.split(".")[-1].upper()
